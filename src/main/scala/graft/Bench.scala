@@ -1,9 +1,12 @@
 package graft
 
 import graft.pipeline.DirtPipeline
+import graft.util.Json.quote
+import graft.util.Sessions
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
 
 /** Round benchmark: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` plus a synthetic-corpus DIRT pipeline throughput
@@ -201,14 +204,6 @@ object Bench {
     }.toDF("vec_id", "embedding")
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   /** Per-query seconds from a bench JSON line (our own single-line
     * format; keys are plain identifiers, values plain doubles) — used to
     * read the pinned committed `bench_baseline.json`.
@@ -384,14 +379,33 @@ object Bench {
     }
   }
 
+  /** The bench-entry registry: every runnable name mapped to its body,
+    * in bench order — the composites, every declared query (composite
+    * members included) as `fn(spark, sfDir).count()`, then the synthetic
+    * entries, sized by `SPARK_GRAFT_DIRT_ROWS` / `SPARK_GRAFT_JACCARD_DOCS`.
+    * Bench times it minus the composite members; BenchOne and
+    * MemoryPressure look names up in it, so an isolated rerun times
+    * EXACTLY what the full bench timed (the lifecycle entry is pipeline +
+    * persist + TSV sink + evaluation sweep, not just the pipeline), or
+    * the isolated-vs-in-sequence comparison diagnoses nothing.
+    */
+  def runners(spark: SparkSession,
+      sfDir: String): VectorMap[String, () => Unit] = {
+    val dirtRows = sys.env.getOrElse("SPARK_GRAFT_DIRT_ROWS", "200000").toLong
+    val jacDocs = sys.env.getOrElse("SPARK_GRAFT_JACCARD_DOCS", "50000").toLong
+    VectorMap.from(compositeRunners(spark, sfDir) ++
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        name -> (() => { fn(spark, sfDir).count(); () })
+      } ++
+      syntheticRunners(spark, dirtRows, jacDocs))
+  }
+
   /** Every composite as a named runnable body — the `composites` groups
     * (members run back-to-back inside the ONE timed region, with the
     * same per-execution cache lifetime the amortized loop used) plus
-    * the shared-graph `cx_dedup_graph`. Shared verbatim with BenchOne so
-    * an isolated composite rerun times exactly what the full bench
-    * timed.
+    * the shared-graph `cx_dedup_graph`.
     */
-  def compositeRunners(spark: SparkSession,
+  private def compositeRunners(spark: SparkSession,
       sfDir: String): Seq[(String, () => Unit)] =
     composites.map { case (name, members) =>
       name -> (() => {
@@ -416,13 +430,8 @@ object Bench {
     }
   }
 
-  /** The synthetic bench entries as named runnable bodies, shared
-    * verbatim with BenchOne — an isolated rerun must time EXACTLY what
-    * the full bench timed (the lifecycle entry is pipeline + persist +
-    * TSV sink + evaluation sweep, not just the pipeline), or the
-    * isolated-vs-in-sequence comparison diagnoses nothing.
-    */
-  def syntheticRunners(spark: SparkSession, dirtRows: Long,
+  /** The synthetic bench entries as named runnable bodies. */
+  private def syntheticRunners(spark: SparkSession, dirtRows: Long,
       jacDocs: Long): Seq[(String, () => Unit)] = Seq(
     // 8x the base rows (round 12): the 200k entry measured ~1 s on a
     // quiet GC-fenced session, under the 2 s honest-work floor every
@@ -927,15 +936,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val dirtRows = sys.env.getOrElse("SPARK_GRAFT_DIRT_ROWS", "200000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus(4))
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
       .max(1)
@@ -1035,20 +1036,11 @@ object Bench {
     // applied uniformly). The name -> body map is kept: the
     // self-adjudication rerun below must time EXACTLY the body the
     // sequence timed.
-    val jacDocs = sys.env.getOrElse("SPARK_GRAFT_JACCARD_DOCS", "50000").toLong
-    val allBodies: Seq[(String, () => Unit)] =
-      compositeRunners(spark, sfDir) ++
-        SparkEntry.queries.toSeq.sortBy(_._1)
-          .filterNot(q => memberSet(q._1))
-          .map { case (name, fn) =>
-            name -> (() => { fn(spark, sfDir).count(); () })
-          } ++
-        syntheticRunners(spark, dirtRows, jacDocs)
-    allBodies.foreach { case (name, body) =>
+    val bodyMap = runners(spark, sfDir).filterNot(e => memberSet(e._1))
+    bodyMap.foreach { case (name, body) =>
       System.gc()
       time(name)(body())
     }
-    val bodyMap = allBodies.toMap
 
     // self-regression guard: any query > 2x its pinned time in the
     // committed bench_baseline.json — AFTER dividing out the run-wide
@@ -1098,31 +1090,31 @@ object Bench {
     val regressions = adjudications.collect {
       case (name, flaggedRatio, _, _, _, true) => name -> flaggedRatio
     }
-    val rs = regressions.map { case (k, r) => s""""${esc(k)}":$r""" }
+    val rs = regressions.map { case (k, r) => s"${quote(k)}:$r" }
       .mkString("{", ",", "}")
     val adj = adjudications.map {
       case (name, fr, iso1, iso2, pin, confirmed) =>
         def d(v: Option[Double]): String =
           v.fold("null")(x => (math.rint(x * 1000) / 1000).toString)
-        s""""${esc(name)}":{"flagged_ratio":$fr,"isolated_sec":${d(iso1)},""" +
+        s"""${quote(name)}:{"flagged_ratio":$fr,"isolated_sec":${d(iso1)},""" +
           s""""isolated2_sec":${d(iso2)},"pin_sec":$pin,""" +
           s""""confirmed":$confirmed}"""
     }.mkString("{", ",", "}")
 
-    val qs = timings.map { case (k, v) => s""""${esc(k)}":$v""" }
+    val qs = timings.map { case (k, v) => s"${quote(k)}:$v" }
       .mkString("{", ",", "}")
-    val ik = inner.map { case (k, v) => s""""${esc(k)}":$v""" }
+    val ik = inner.map { case (k, v) => s"${quote(k)}:$v" }
       .mkString("{", ",", "}")
     val sp = spreads.map { case (k, (lo, hi)) =>
-      s""""${esc(k)}":[$lo,$hi]"""
+      s"${quote(k)}:[$lo,$hi]"
     }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
+    val es = errors.map { case (k, v) => s"${quote(k)}:${quote(v)}" }
       .mkString("{", ",", "}")
     val total = timings.values.sum
     val loadR = math.rint(load * 1000) / 1000
     val cx = (composites :+ ("cx_dedup_graph" -> dedupGraphMembers))
       .map { case (k, ms) =>
-        s""""${esc(k)}":[${ms.map(m => s""""${esc(m)}"""").mkString(",")}]"""
+        s"""${quote(k)}:[${ms.map(quote).mkString(",")}]"""
       }
       .mkString("{", ",", "}")
     // exonerated flags stay visible at summary level (ADVICE r13): the
@@ -1132,7 +1124,7 @@ object Bench {
     val nFlagged = adjudications.size
     val nExonerated = adjudications.count(!_._6)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"load":$loadR,"queries":$qs,"spread":$sp,"inner":$ik,"composites":$cx,"errors":$es,"regressions":$rs,"adjudications":$adj,"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"n_ok":${timings.size},"n_err":${errors.size},"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"load":$loadR,"queries":$qs,"spread":$sp,"inner":$ik,"composites":$cx,"errors":$es,"regressions":$rs,"adjudications":$adj,"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"n_ok":${timings.size},"n_err":${errors.size},"sf":${quote(sfDir)}}"""
     Files.writeString(Paths.get("bench.json"), json + "\n")
     // a few-hundred-byte summary twin: the r13 official artifact's tail
     // window started mid-way through the full JSON line, so `parsed`
@@ -1140,7 +1132,7 @@ object Bench {
     // "what's wrong" #1). The compact line carries the headline fields
     // and, being tiny AND last, survives any tail window.
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","load":$loadR,"n_ok":${timings.size},"n_err":${errors.size},"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"regressions":$rs,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","load":$loadR,"n_ok":${timings.size},"n_err":${errors.size},"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"regressions":$rs,"sf":${quote(sfDir)}}"""
     // stop Spark BEFORE printing: executor/shutdown log lines racing the
     // same stdout were the likeliest cause of the driver's two
     // unparseable official artifacts (BENCH_r11/r12 "parsed": null).

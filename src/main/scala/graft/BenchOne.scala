@@ -1,50 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Isolated per-query timing: runs only the named queries (plus the same
   * warmup query Bench uses), several repetitions each, in a fresh
   * session — the tool for separating a genuinely slow operator from
   * session-aging collateral (GC/shuffle-file pressure inherited from a
-  * heavy neighbor in the full bench sequence).
+  * heavy neighbor in the full bench sequence). Names resolve in
+  * [[Bench.runners]]: a composite (`cx_dedup_graph`, `cx_rel_core`, ...)
+  * or synthetic entry times exactly the body the full bench timed; a bare
+  * member name (q69...) times the declared stand-alone query.
   *
   * Usage: `runMain graft.BenchOne q33_dedup_minhash q34_dedup_simhash`
-  * (env `SPARK_GRAFT_SF_DIR`/`SPARK_GRAFT_CPUS`/`SPARK_GRAFT_REPS` as in
-  * Bench).
+  * (env `SPARK_GRAFT_SF_DIR`/`SPARK_GRAFT_CPUS`/`SPARK_GRAFT_BENCH_REPS`
+  * as in Bench).
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
+    val spark = Sessions.local(Sessions.envCpus(4))
 
     try SparkEntry.queries("q01_agg_sum_groupby")(spark, sfDir).count()
     catch { case _: Throwable => () }
 
-    // the three synthetic bench entries share their runnable bodies with
-    // Bench verbatim (Bench.syntheticRunners) — an isolated rerun times
-    // EXACTLY what the full bench timed
-    val synthetic: Map[String, () => Unit] = Bench.syntheticRunners(spark,
-      sys.env.getOrElse("SPARK_GRAFT_DIRT_ROWS", "200000").toLong,
-      sys.env.getOrElse("SPARK_GRAFT_JACCARD_DOCS", "50000").toLong).toMap
-    // composite entries (`BenchOne cx_dedup_graph`, `cx_rel_core`, ...)
-    // share their runnable bodies with Bench verbatim; a bare member
-    // name (q69...) times the declared stand-alone query instead
-    val overrides = Bench.compositeRunners(spark, sfDir).toMap
-
+    val runners = Bench.runners(spark, sfDir)
     args.foreach { name =>
-      val body: () => Unit = overrides.get(name)
-        .orElse(SparkEntry.queries.get(name)
-          .map(fn => () => { fn(spark, sfDir).count(); () }))
-        .orElse(synthetic.get(name))
-        .getOrElse(sys.error(s"unknown query: $name"))
+      val body = runners.getOrElse(name, sys.error(s"unknown query: $name"))
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         body()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Regeneration path for [[graft.operators.FrozenCentroids]]: trains the
   * 16-cell coarse k-means quantizer (`Ivf.trainCentroids`, nList=16,
@@ -35,13 +35,7 @@ object FreezeCentroids {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
 
     val trained = dirs.map { dir =>
       val key = new java.io.File(dir).getName

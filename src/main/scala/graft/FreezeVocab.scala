@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Json.quote
+import graft.util.Sessions
 import org.apache.spark.sql.functions._
 
 /** Regeneration path for [[graft.operators.FrozenVocab]]: trains the BPE
@@ -18,23 +19,9 @@ import org.apache.spark.sql.functions._
   * present.
   */
 object FreezeVocab {
-  def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
     import spark.implicits._
 
     val docs = Tables.documents(spark, sfDir)
@@ -43,7 +30,8 @@ object FreezeVocab {
       .select(col("rank").cast("int"), col("left"), col("right"))
       .as[(Int, String, String)].collect().sortBy(_._1)
     println("  val bpeMerges: Vector[(String, String)] = Vector(")
-    println(bpe.map(t => s"    (${q(t._2)}, ${q(t._3)})").mkString(",\n"))
+    println(bpe.map(t => s"    (${quote(t._2)}, ${quote(t._3)})")
+      .mkString(",\n"))
     println("  )")
 
     val wp = graft.operators.WordPiece
@@ -51,7 +39,7 @@ object FreezeVocab {
     val vocab = wp.vocabulary(docs, merges).toSeq.sorted
     println()
     println("  val wordPieceVocab: Vector[String] = Vector(")
-    println(vocab.grouped(6).map(g => "    " + g.map(q).mkString(", "))
+    println(vocab.grouped(6).map(g => "    " + g.map(quote).mkString(", "))
       .mkString(",\n"))
     println("  )")
 
@@ -67,7 +55,7 @@ object FreezeVocab {
       .as[(String, Double)].collect().sortBy(_._1)
     println()
     println("  val unigramTable: Vector[(String, Double)] = Vector(")
-    println(uni.map { case (p, lp) => s"    (${q(p)}, $lp)" }
+    println(uni.map { case (p, lp) => s"    (${quote(p)}, $lp)" }
       .mkString(",\n"))
     println("  )")
     spark.stop()

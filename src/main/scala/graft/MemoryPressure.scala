@@ -1,7 +1,8 @@
 package graft
 
+import graft.util.Json.quote
+import graft.util.Sessions
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.LongAdder
 
@@ -40,21 +41,14 @@ object MemoryPressure {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.envCpus(32)
     val names =
       if (args.nonEmpty) args.toSeq
       else Seq("q32_dedup_jaccard", "q68_dedup_components",
         "q78_curate_corpus_pipeline", "q110_fuzzy_join_editdist",
         "q114_bpe_encode")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.memory.fraction",
-        sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.6"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "spark.memory.fraction" ->
+      sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.6"))
 
     val memSpilled = new LongAdder
     val diskSpilled = new LongAdder
@@ -71,15 +65,14 @@ object MemoryPressure {
       }
     })
 
-    // synthetic probe entries resolve exactly as in BenchOne, so the
-    // scale knobs (SPARK_GRAFT_PLANTED_GROUPS, SPARK_GRAFT_JACCARD_DOCS,
-    // SPARK_GRAFT_DIRT_ROWS) let the probe push per-task state past the
-    // pool where the sf0.1 declared queries alone stay comfortably under
-    // it (round-11 finding: every default query peaks ~80 MB/task and
-    // completes spill-free even at SPARK_DRIVER_MEM=1g)
-    val synthetic: Map[String, () => Unit] = Bench.syntheticRunners(spark,
-      sys.env.getOrElse("SPARK_GRAFT_DIRT_ROWS", "200000").toLong,
-      sys.env.getOrElse("SPARK_GRAFT_JACCARD_DOCS", "50000").toLong).toMap
+    // names resolve in Bench.runners exactly as in BenchOne, so the
+    // synthetic entries' scale knobs (SPARK_GRAFT_PLANTED_GROUPS,
+    // SPARK_GRAFT_JACCARD_DOCS, SPARK_GRAFT_DIRT_ROWS) let the probe push
+    // per-task state past the pool where the sf0.1 declared queries alone
+    // stay comfortably under it (round-11 finding: every default query
+    // peaks ~80 MB/task and completes spill-free even at
+    // SPARK_DRIVER_MEM=1g)
+    val runners = Bench.runners(spark, sfDir)
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -87,11 +80,7 @@ object MemoryPressure {
       memSpilled.reset(); diskSpilled.reset(); peakExec.set(0L)
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries.get(name)
-          .map(fn => () => { fn(spark, sfDir).count(); () })
-          .orElse(synthetic.get(name))
-          .getOrElse(sys.error(s"unknown query: $name"))
-          .apply()
+        runners.getOrElse(name, sys.error(s"unknown query: $name")).apply()
         val sec = (System.nanoTime() - t0) / 1e9
         results(name) =
           s"""{"sec":$sec,"memoryBytesSpilled":${memSpilled.sum()},""" +
@@ -101,17 +90,16 @@ object MemoryPressure {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
             .linesIterator.take(1).mkString.take(200)
-            .replace("\\", "\\\\").replace("\"", "\\\"")
       } finally spark.catalog.clearCache()
     }
 
     val heapMax = Runtime.getRuntime.maxMemory()
-    val qs = results.map { case (k, v) => s""""$k":$v""" }
+    val qs = results.map { case (k, v) => s"${quote(k)}:$v" }
       .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s""""$k":"$v"""" }
+    val es = errors.map { case (k, v) => s"${quote(k)}:${quote(v)}" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"memory_pressure","heapMaxBytes":$heapMax,""" +
-      s""""cpus":$cpus,"sf":"$sfDir","queries":$qs,"errors":$es}""")
+      s""""cpus":$cpus,"sf":${quote(sfDir)},"queries":$qs,"errors":$es}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

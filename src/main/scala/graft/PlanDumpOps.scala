@@ -1,28 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions._
 
-/** Dump `.explain("formatted")` for OPERATOR-INTERNAL stages that no
-  * declared query's top-level plan shows (iteration bodies that run
-  * behind localCheckpoint boundaries, verify stages inside typed maps) —
-  * the round-19 plan evidence for `plans/r19/`.
+/** Dump `.explain("formatted")` to `<outDir>/<name>_<suffix>.txt` — the
+  * plan evidence under `plans/`. A name is looked up first in the `dumps`
+  * map below, the OPERATOR-INTERNAL stages that no declared query's
+  * top-level plan shows (iteration bodies that run behind
+  * localCheckpoint boundaries, verify stages inside typed maps), then in
+  * [[SparkEntry.queries]].
   *
   * Usage: `runMain graft.PlanDumpOps <sfDir> <outDir> <suffix> <name>...`
-  * with names from the `dumps` map below. Same session shape as Bench.
   */
 object PlanDumpOps {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names @ _*) = args.toSeq.toArray
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus(32))
     import spark.implicits._
     new java.io.File(outDir).mkdirs()
 
@@ -73,7 +66,9 @@ object PlanDumpOps {
       }))
 
     names.foreach { n =>
-      val plan = dumps(n)().queryExecution
+      val ds = dumps.get(n).map(_())
+        .getOrElse(SparkEntry.queries(n)(spark, sfDir))
+      val plan = ds.queryExecution
         .explainString(ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), plan)

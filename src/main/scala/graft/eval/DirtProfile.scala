@@ -1,9 +1,9 @@
 package graft.eval
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 import graft.pipeline.DirtPipeline
+import graft.util.Sessions
 
 /** Stage-level timing of the DIRT planted pipeline (optimization guide
   * §1: measure first, label jobs, time with the noop sink) — separates
@@ -17,14 +17,7 @@ object DirtProfile {
   def main(args: Array[String]): Unit = {
     val groups = args.headOption.map(_.toInt).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_PLANTED_GROUPS", "41667").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus(32))
     import spark.implicits._
 
     def timed[T](label: String)(body: => T): T = {

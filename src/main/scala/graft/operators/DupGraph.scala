@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.util.Ids
+import graft.util.{Checkpoints, Ids}
 
 /** Connected components over a near-duplicate pair graph: the step that
   * turns pairwise dedup output (q32/q33/q34/q45 emit PAIRS) into the
@@ -88,7 +88,7 @@ object DupGraph {
         // per components() call, only ever at the fixed point.
         converged = next.toDF("u", "v").except(edges.toDF("u", "v")).isEmpty
       }
-      freeCheckpoint(edges)
+      Checkpoints.free(edges)
       edges = next
       fp = nfp
       it += 1
@@ -147,12 +147,6 @@ object DupGraph {
       .distinct()
       .as[(Long, Long)]
   }
-
-  /** Frees a localCheckpoint's storage blocks — see
-    * [[graft.util.Checkpoints.free]] (shared with [[Bpe.trainMerges]]).
-    */
-  private def freeCheckpoint(ds: Dataset[_]): Unit =
-    graft.util.Checkpoints.free(ds)
 
   /** Corpus minus near-duplicates: keeps every doc that is its own
     * cluster minimum (including all docs with no pair at all — absent
@@ -253,7 +247,7 @@ object DupGraph {
         // blocks), then free that previous checkpoint — only ever a
         // frame that localCheckpoint actually produced
         val ck = next.localCheckpoint(true)
-        freeCheckpoint(lastCkpt)
+        Checkpoints.free(lastCkpt)
         lastCkpt = ck
         pr = ck
         sinceCkpt = 0

@@ -237,7 +237,7 @@ object Multimodal {
   def syntheticWavTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBoundAny(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -350,7 +350,7 @@ object Multimodal {
   def syntheticPngTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBoundAny(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -775,7 +775,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBoundAny(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -942,7 +942,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBoundAny(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -1303,7 +1303,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBoundAny(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -1482,7 +1482,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBoundAny(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>

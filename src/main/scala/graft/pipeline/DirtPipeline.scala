@@ -100,15 +100,12 @@ object DirtPipeline {
       triples: DataFrame,
       swMargins: DataFrame,
       psMargins: DataFrame,
-      n: Long,
-      broadcastMargins: Boolean = false): DataFrame = {
+      n: Long): DataFrame = {
     // The f(slot,word) margin table is vocabulary-sized — NOT broadcastable
-    // on a large corpus. Default to a plain shuffle join and let
-    // AQE/auto-broadcast promote it when the stats say it is small; the
-    // flag stays for callers that know their vocabulary is tiny.
-    val sw = if (broadcastMargins) broadcast(swMargins) else swMargins
+    // on a large corpus: a plain shuffle join, which AQE/auto-broadcast
+    // promotes when the stats say it is small.
     triples
-      .join(sw, Seq("slot", "word"), "inner")
+      .join(swMargins, Seq("slot", "word"), "inner")
       .join(psMargins, Seq("path", "slot"), "inner")
       .withColumn("mi",
         log(col("cnt").cast("double") * lit(n.toDouble) /

@@ -1142,7 +1142,7 @@ object PipelineQueries {
   val q106 = Q.checked("q106_multimodal_image_dedup", MediaSql.imageDedup) {
     (s, d) =>
     import s.implicits._
-    val ids = graft.util.Spread.cpuBoundDs(
+    val ids = graft.util.Spread.cpuBound(
       Tables.documents(s, d).select(col("doc_id").cast("long")).as[Long])
     val media = ids.mapPartitions(_.flatMap { id =>
       val a = 1 + (id % 97).toInt
@@ -1176,7 +1176,7 @@ object PipelineQueries {
   val q107 = Q.checked("q107_multimodal_audio_dedup", MediaSql.audioDedup) {
     (s, d) =>
     import s.implicits._
-    val ids = graft.util.Spread.cpuBoundDs(
+    val ids = graft.util.Spread.cpuBound(
       Tables.documents(s, d).select(col("doc_id").cast("long")).as[Long])
     val media = ids.mapPartitions(_.flatMap { id =>
       val a = 1 + (id % 28).toInt // never 0 mod 29: envelope stays varied

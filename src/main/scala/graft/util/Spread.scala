@@ -1,8 +1,8 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
-  LogicalPlan, Sort, Window}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit,
+  Join, LocalLimit, Sort, Window}
 
 /** Scan-parallelism floor for CPU-bound per-row stages (optimization
   * guide §2.5 "input skew" / §6 `spark.sql.files.minPartitionNum`).
@@ -27,46 +27,48 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
   * inspecting the partition count of a plan that already contains an
   * exchange can trigger partial execution under AQE. This is now
   * ENFORCED (VERDICT r18 what's-wrong #5): the partition probe refuses
-  * plans containing joins, aggregations, windows, sorts or
-  * repartitions instead of relying on call-site convention. For a
-  * CPU-bound stage fed by such a plan use [[cpuBoundPost]], which never
-  * probes.
+  * plans containing joins, aggregations, windows, sorts or limits
+  * instead of relying on call-site convention. The check reads the
+  * OPTIMIZED plan, where `distinct`/`dropDuplicates` have become
+  * aggregates and `intersect`/`except` joins, so those are refused too.
+  * For a CPU-bound stage fed by such a plan use [[cpuBoundPost]], which
+  * never probes; an operator that takes a caller's frame of unknown
+  * shape uses [[cpuBoundAny]], which picks between the two.
   */
 object Spread {
 
-  private def assertProbeSafe(plan: LogicalPlan): Unit = {
-    // an explicit caller Repartition stays allowed (SpreadSpec pins the
-    // no-op path for pre-repartitioned frames): probing it pre-executes
-    // a shuffle the caller runs anyway, whereas probing a join/agg/
-    // window/sort can partially execute arbitrary upstream work
-    val offender = plan.collectFirst {
-      case j: Join => j.nodeName
-      case a: Aggregate => a.nodeName
-      case w: Window => w.nodeName
-      case s: Sort => s.nodeName
+  /** The first node of `ds`'s optimized plan that makes probing its
+    * partition count unsafe. An explicit caller Repartition stays
+    * allowed (SpreadSpec pins the no-op path for pre-repartitioned
+    * frames): probing it pre-executes a shuffle the caller runs anyway,
+    * whereas probing a join/agg/window/sort/limit can partially execute
+    * arbitrary upstream work.
+    */
+  private def probeOffender(ds: Dataset[_]): Option[String] =
+    ds.queryExecution.optimizedPlan.collectFirst {
+      case p @ (_: Join | _: Aggregate | _: Window | _: Sort |
+          _: GlobalLimit | _: LocalLimit) => p.nodeName
     }
+
+  /** `ds` repartitioned up to the cluster's default parallelism when its
+    * current scan parallelism is below it; unchanged otherwise.
+    */
+  def cpuBound[T](ds: Dataset[T]): Dataset[T] = {
+    val offender = probeOffender(ds)
     require(offender.isEmpty,
       s"Spread.cpuBound probes the input's partition count, which can " +
         s"trigger partial execution under AQE on plans containing " +
         s"exchanges — found ${offender.get}; use Spread.cpuBoundPost " +
         "for post-exchange stages")
-  }
-
-  /** `df` repartitioned up to the cluster's default parallelism when its
-    * current scan parallelism is below it; unchanged otherwise.
-    */
-  def cpuBound(df: DataFrame): DataFrame = {
-    assertProbeSafe(df.queryExecution.analyzed)
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
-  /** [[cpuBound]] for typed Datasets. */
-  def cpuBoundDs[T](ds: Dataset[T]): Dataset[T] = {
-    assertProbeSafe(ds.queryExecution.analyzed)
     val target = ds.sparkSession.sparkContext.defaultParallelism
     if (ds.rdd.getNumPartitions >= target) ds else ds.repartition(target)
   }
+
+  /** The floor for operators that take a caller's frame of any shape:
+    * [[cpuBound]] when its plan is safe to probe, else [[cpuBoundPost]].
+    */
+  def cpuBoundAny[T](ds: Dataset[T]): Dataset[T] =
+    if (probeOffender(ds).isEmpty) cpuBound(ds) else cpuBoundPost(ds)
 
   /** Parallelism floor for a CPU-bound stage fed by a plan that already
     * contains exchanges (a join output, an aggregation): AQE coalesces

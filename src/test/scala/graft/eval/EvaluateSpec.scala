@@ -1,5 +1,6 @@
 package graft.eval
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +10,7 @@ import scala.util.Try
 
 class EvaluateSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("evaluate-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   test("max-dedup keeps max score per canonical pair and drops zeros") {
     import spark.implicits._

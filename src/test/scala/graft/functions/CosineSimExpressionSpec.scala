@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.Tables
 import graft.operators.VectorSearch
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CosineSimExpressionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("cosine-expression-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf = "/root/testdata/sf0.001"
 

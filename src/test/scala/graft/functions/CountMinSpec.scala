@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +13,7 @@ import scala.util.Random
   */
 class CountMinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("count-min-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   test("estimates never underestimate; error stays within εn on skewed streams") {
     val rnd = new Random(7)

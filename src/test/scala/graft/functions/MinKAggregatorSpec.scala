@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MinKAggregatorSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("mink-aggregator-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   test("typed agg returns exact per-group smallest-k across partitions") {
     import spark.implicits._

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +14,7 @@ import scala.util.Random
   */
 class MisraGriesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("misra-gries-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def checkGuarantees(stream: Seq[String], k: Int,
       summary: Map[String, Long]): Unit = {

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.Sessions
 import java.text.Normalizer
 
 import org.apache.spark.sql.SparkSession
@@ -11,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NfcNormalizeExpressionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("nfc-expression-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   // decomposed é, decomposed Å (A + ring), Hangul jamo sequence,
   // already-NFC text, empty string, plain ASCII

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.text.Porter
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PorterStemExpressionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("porter-expression-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val words = Seq("causes", "accompanied", "dying", "lead", "associations",
     "flies", "caresses", "ponies", "relational", "a", "")

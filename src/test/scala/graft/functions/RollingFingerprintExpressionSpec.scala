@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextAnalysis
+import graft.util.Sessions
 
 /** The native `rolling_fingerprint` expression must agree BIT-FOR-BIT
   * with [[TextAnalysis.fingerprintOf]] on every path — the ASCII
@@ -13,12 +14,7 @@ import graft.operators.TextAnalysis
   */
 class RollingFingerprintExpressionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("rolling-fingerprint-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   // ASCII (fast path), exactly-K, K-1 (sentinel), empty, non-ASCII
   // (fallback: é is 2 UTF-8 bytes / 1 UTF-16 unit), mixed, long ASCII

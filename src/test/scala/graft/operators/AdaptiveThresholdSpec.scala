@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AdaptiveThresholdSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("adaptive-threshold-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf = "/root/testdata/sf0.001"
 

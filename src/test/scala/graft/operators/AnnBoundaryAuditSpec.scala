@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,12 +39,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AnnBoundaryAuditSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ann-boundary-audit")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val dir = "/root/testdata/sf0.01"
   val BoundaryFloor = 5e-4 // decimal-6 units; reorder noise ≲ 1e-7 units

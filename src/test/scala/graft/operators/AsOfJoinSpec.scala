@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,13 +8,7 @@ import java.sql.Timestamp
 
 class AsOfJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("asof-join-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BloomJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-join-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf = "/root/testdata/sf0.001"
 

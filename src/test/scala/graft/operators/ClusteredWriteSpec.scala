@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.util.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -15,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ClusteredWriteSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("clustered-write-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** Rows the parquet reader actually surfaced for `df`'s scan(s). */
   private def scannedRows(df: DataFrame): Long = {

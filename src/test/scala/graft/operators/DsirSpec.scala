@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DsirSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dsir-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   // docs: d0 "a a b" (the target slice), d1 "c c b".
   // ct: a=2 b=1; cr: a=2 b=2 c=2; n_t=3 n_r=6 v=3.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,13 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FooterStatsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("footer-stats-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def tmpRoot(): String = {
     val d = java.nio.file.Files.createTempDirectory("footer_stats_").toString

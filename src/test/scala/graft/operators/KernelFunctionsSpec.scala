@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,12 +54,7 @@ class KernelFunctionsSpec extends AnyFunSuite {
     assert(TextAnalysis.fingerprintOf(null) == 0L)
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("kernel-functions-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   test("minhashPairs emits canonical id1 < id2 pairs") {
     import spark.implicits._

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LmScoreSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("lm-score-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   import spark.implicits._
 

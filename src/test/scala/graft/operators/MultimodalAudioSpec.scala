@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +13,7 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
   */
 class MultimodalAudioSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("multimodal-audio-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** 16-bit PCM bytes for the given interleaved samples, through the real
     * JDK writer for the given container type.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MultimodalImageSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("multimodal-image-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def image(w: Int, h: Int, fmt: String)(px: (Int, Int) => Int): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(

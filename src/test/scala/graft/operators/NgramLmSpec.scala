@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NgramLmSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ngram-lm-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   // train "a b a b c": bigrams (a,b)=2, (b,a)=1, (b,c)=1; unigrams
   // a=2 b=2 c=1, N=5

@@ -1,17 +1,13 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** PII redaction and corpus vocabulary semantics. */
 class PiiVocabSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pii-vocab-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   import scala.jdk.CollectionConverters._
 

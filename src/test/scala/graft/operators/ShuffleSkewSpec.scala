@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,12 +26,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ShuffleSkewSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("shuffle-skew-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4,
+    "spark.sql.shuffle.partitions" -> "8")
 
   /** Runtime confs set per-test and restored in a finally — the test JVM
     * shares one SparkSession across suites (`getOrCreate`).

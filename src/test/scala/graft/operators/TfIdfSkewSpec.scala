@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,12 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TfIdfSkewSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("tfidf-skew-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4,
+    "spark.sql.shuffle.partitions" -> "8")
 
   /** All skew-probe confs are RUNTIME confs, set per-test and restored in
     * a finally — the test JVM shares one SparkSession across suites

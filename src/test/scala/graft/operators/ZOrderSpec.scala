@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.util.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -14,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ZOrderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("zorder-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** Plain-Scala Morton reference: bit i of a → 2i, bit i of b → 2i+1. */
   private def mortonRef(a: Long, b: Long, bits: Int): Long =

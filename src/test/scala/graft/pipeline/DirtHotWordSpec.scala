@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -24,12 +25,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DirtHotWordSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dirt-hotword-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4,
+    "spark.sql.shuffle.partitions" -> "8")
 
   /** `paths` distinct verbs, every line filling slot X with the SAME
     * hot word — the Zipf head case the full-key exchange exists for.

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.queries.PlantedBiarc
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,12 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DirtSkewSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dirt-skew-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4,
+    "spark.sql.shuffle.partitions" -> "8")
 
   private def withConfs[A](confs: (String, String)*)(body: => A): A = {
     val conf = spark.conf

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.text.{BiarcParser, PathExtractor}
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,12 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RealBiarcSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("real-biarc-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** Committed real-format corpus. Heads are 1-based over the KEPT
     * tokens (the reference parses tolerantly and skips malformed

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraftTable
+import graft.util.Sessions
 
 /** [[org.apache.spark.sql.graft.GraftTableSource]] — the table format
   * as a streaming SOURCE: a fresh checkpoint serves the full history
@@ -16,12 +17,7 @@ import graft.operators.GraftTable
   */
 class GraftTableSourceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-table-source-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val Fmt = "org.apache.spark.sql.graft.GraftTableSourceProvider"
 

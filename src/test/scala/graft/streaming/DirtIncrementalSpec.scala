@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.DirtPipeline
+import graft.util.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -15,13 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DirtIncrementalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dirt-incremental-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   // 400 lines of the correlated synthetic corpus (positive MI, nonzero
   // Lin scores), as four 100-line micro-batches

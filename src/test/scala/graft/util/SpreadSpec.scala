@@ -14,13 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SpreadSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("spread-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf = "/root/testdata/sf0.001"
 
@@ -65,6 +59,14 @@ class SpreadSpec extends AnyFunSuite {
     assert(e.getMessage.contains("cpuBoundPost"), e.getMessage)
     val agg = a.groupBy("i").count()
     intercept[IllegalArgumentException](Spread.cpuBound(agg))
+    // distinct/dropDuplicates become aggregates and intersect/except
+    // joins only in the optimized plan the guard reads; a range, not a
+    // local relation, so the optimizer cannot fold the limit away
+    val r = spark.range(100).select((col("id") % 7).as("i"))
+    Seq(r.distinct(), r.dropDuplicates("i"), r.intersect(r), r.except(r),
+      r.limit(5)).foreach { df =>
+      intercept[IllegalArgumentException](Spread.cpuBound(df))
+    }
   }
 
   test("cpuBoundPost spreads to max(defaultParallelism, shuffle.partitions)") {
@@ -76,6 +78,10 @@ class SpreadSpec extends AnyFunSuite {
       spark.sessionState.conf.numShufflePartitions)
     assert(out.rdd.getNumPartitions == want)
     assert(out.collect().map(_.getInt(0)).sorted.toSeq == (0 until 64))
+    // an operator's caller-supplied join or limit takes the same path
+    assert(Spread.cpuBoundAny(joined).rdd.getNumPartitions == want)
+    assert(Spread.cpuBoundAny(spark.range(64).limit(5))
+      .rdd.getNumPartitions == want)
   }
 
   test("spread rows are the scanned rows — same result set") {

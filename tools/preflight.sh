@@ -26,6 +26,18 @@ state_hash() {
         sha256sum | cut -d' ' -f1
 }
 
+# One session builder: every entry point and spec builds its session
+# through graft.util.Sessions.local, so a SparkSession.builder anywhere
+# else under src/ is a copy that can drift from it. -a: some specs carry
+# control characters and would otherwise be skipped as binary.
+stray=$(grep -rla "SparkSession\.builder" src |
+    grep -vx "src/main/scala/graft/util/Sessions.scala" || true)
+if [ -n "$stray" ]; then
+    echo "preflight: SparkSession.builder outside Sessions.scala:" >&2
+    echo "$stray" >&2
+    exit 1
+fi
+
 sbt -batch compile test
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/preflight_verify"
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/preflight_verify

@@ -78,7 +78,7 @@ def bench_one(sf_dir, names, reps, extra_env=None, cache_key=None):
     if cache and os.path.exists(cache):
         return json.load(open(cache))
     env = {"SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": "32",
-           "SPARK_GRAFT_REPS": str(reps),
+           "SPARK_GRAFT_BENCH_REPS": str(reps),
            # the 20M-line planted probe needs real heap; harmless for
            # the rest (the machine has 128 GiB)
            "SPARK_DRIVER_MEM": "64g"}
